@@ -842,6 +842,15 @@ def test_cli_tvec_pctl_xstats(capsys, spark, index_dir):
         "--index", index_dir, "--query", "spark hash",
     )
     assert len(xs) == 1 and "n_docs=" in xs[0] and "std_doc_len=" in xs[0]
+    # mixed-case, punctuated input is analyzed like every other query verb
+    assert run_cli(
+        capsys, spark, "--format", "text", "pctl", "--index", index_dir,
+        "--query", "Spark, HASH", "--pcts", "0.5,0.9",
+    ) == pc
+    assert run_cli(
+        capsys, spark, "--format", "text", "xstats",
+        "--index", index_dir, "--query", "Spark, HASH",
+    ) == xs
 
 
 def test_cli_suggest_phrase_mode(capsys, spark, tmp_path):
@@ -864,6 +873,22 @@ def test_cli_rankeval_verb(capsys, spark, index_dir):
     got = dict(l.split() for l in rows)
     assert set(got) == {"precision_at_k", "recall_at_k", "mrr", "ndcg_at_k"}
     assert all(0.0 <= float(v) <= 1.0 for v in got.values())
+    assert run_cli(
+        capsys, spark, "--format", "text", "rankeval", "--index", index_dir,
+        "--query", "Spark, HASH", "--relevant", "0,1,2", "--k", "5",
+    ) == rows
+
+
+def test_cli_alias_swap_requires_target(capsys, spark, index_dir, tmp_path):
+    """--swap without --target exits instead of printing the current
+    pointer, and leaves the pointer as it was."""
+    from contextinator_spark.operators.alias import read_alias
+
+    a = str(tmp_path / "alias")
+    run_cli(capsys, spark, "alias", "--alias", a, "--target", index_dir)
+    with pytest.raises(SystemExit, match="--swap requires --target"):
+        cli.main(["alias", "--alias", a, "--swap"], spark=spark)
+    assert read_alias(a) == os.path.abspath(index_dir)
 
 
 def test_cli_count_approx_and_datehisto(capsys, spark, index_dir):

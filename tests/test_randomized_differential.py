@@ -8,6 +8,7 @@ corpus-shape axis the fixed testdata never varies."""
 
 from __future__ import annotations
 
+import itertools
 import random
 import re
 
@@ -20,14 +21,15 @@ N_DOCS = 160
 VOCAB = [f"w{i}" for i in range(120)]
 
 
-def _zipf_corpus():
-    rng = random.Random(SEED)
-    # Zipfian term draw: weight 1/rank
-    weights = [1.0 / (i + 1) for i in range(len(VOCAB))]
+def _zipf_corpus(seed=SEED, n_docs=N_DOCS, vocab=VOCAB):
+    rng = random.Random(seed)
+    # Zipfian term draw: weight 1/rank (cumulative once — same draws as
+    # weights=, without an O(vocab) pass per document)
+    cum_weights = list(itertools.accumulate(1.0 / (i + 1) for i in range(len(vocab))))
     docs = {}
-    for d in range(N_DOCS):
+    for d in range(n_docs):
         n = rng.randint(3, 60)
-        docs[d] = " ".join(rng.choices(VOCAB, weights=weights, k=n))
+        docs[d] = " ".join(rng.choices(vocab, cum_weights=cum_weights, k=n))
     return docs
 
 

@@ -914,3 +914,37 @@ def test_sort_topk_matches_meta_order(spark, corpus, index_dir):
         bm25_segments.sort_topk(spark, index_dir, ["zzz_no_such_term"], "doc_len").count()
         == 0
     )
+
+
+def test_fused_kernel_memory_bounded_by_one_batch():
+    """The fused tokenize+combine kernel keeps nothing from one Arrow batch
+    to the next, so its traced peak over 20 batches — each with a fresh
+    20k-term Zipfian vocabulary — stays within 1.5× of its peak over one.
+    A kernel that accumulated vocabulary state, or left token strings to
+    the cyclic GC, grows with the number of batches instead."""
+    import tracemalloc
+
+    import pandas as pd
+    from test_randomized_differential import _zipf_corpus
+
+    n_docs = 1000
+    batches = []
+    for i in range(20):
+        docs = _zipf_corpus(seed=i, n_docs=n_docs, vocab=[f"b{i}w{j}" for j in range(20_000)])
+        batches.append(
+            pd.DataFrame({"doc_id": [i * n_docs + d for d in docs], "content": list(docs.values())})
+        )
+    kernel = S._make_fused_combine({}, max_doc_id=20 * n_docs)
+
+    def peak(pdfs):
+        tracemalloc.start()
+        try:
+            rows = sum(len(out) for out in kernel(iter(pdfs)))
+            return tracemalloc.get_traced_memory()[1], rows
+        finally:
+            tracemalloc.stop()
+
+    one, rows_one = peak(batches[:1])
+    twenty, rows_twenty = peak(batches)
+    assert rows_one > 0 and rows_twenty > 10 * rows_one
+    assert twenty < 1.5 * one, (one, twenty)

@@ -170,6 +170,46 @@ def test_clean_uncommitted_spares_ingest_deltas(tmp_path):
     assert os.path.exists(f"{pdir}/ingest-b2-0.parquet")
 
 
+def test_ingest_salts_both_formats_alike(spark, corpus, tmp_path_factory):
+    """One batch ingested into a format-1 and a format-2 copy of the same
+    base store stages the same delta slices and dictionary rows: both
+    formats salt against the MERGED collection, not the batch alone. The
+    batch is small next to the base (≤10%), so a batch-local heavy
+    threshold would salt far more terms than the merged one."""
+    from contextinator_spark.streaming.ingest import apply_ingest_batch
+
+    c = corpus.withColumn("doc_id", F.pmod(F.xxhash64("repo", "path"), F.lit(2**61)))
+    ids = sorted(r["doc_id"] for r in c.select("doc_id").collect())
+    in_batch = F.col("doc_id").isin(ids[::12])  # spread over the id range
+    base, batch = c.filter(~in_batch), c.filter(in_batch)
+    assert 0 < batch.count() <= 0.1 * base.count()
+    batch = batch.select("doc_id", "repo", "path", "commit", "lang", "content")
+
+    def staged(positions):
+        d = str(tmp_path_factory.mktemp(f"salt_fmt{2 if positions else 1}"))
+        S.write_index(spark, base, d, positions=positions)
+        apply_ingest_batch(batch, 0, d)
+        seg = spark.read.parquet(f"{d}/segments").filter(F.col("slice_id") >= 1_000_000)
+        slices = sorted(
+            tuple(r)
+            for r in seg.select(
+                "term", "slice_id", "df_slice", "cf_slice", "partition_id"
+            ).collect()
+        )
+        terms = sorted(
+            tuple(r)
+            for r in spark.read.parquet(f"{d}/terms_delta")
+            .select("term", "df", "cf", "partition_id")
+            .collect()
+        )
+        shutil.rmtree(d, ignore_errors=True)
+        return slices, terms
+
+    fmt1, fmt2 = staged(False), staged(True)
+    assert fmt1[1] and any(sid > 1_000_000 for _, sid, *_ in fmt1[0])  # salted
+    assert fmt1 == fmt2
+
+
 def test_incremental_ingest_positions_matches_batch(spark, corpus, tmp_path_factory):
     """Positional twin of test_incremental_ingest_matches_batch: streaming
     format-2 delta blobs into a positions store must leave phrase, NEAR and
